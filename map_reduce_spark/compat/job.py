@@ -33,11 +33,11 @@ from __future__ import annotations
 import os
 import shutil
 from collections.abc import Callable, Iterable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from map_reduce_spark.compat.fnv import ihash, make_partitioner
+from map_reduce_spark.compat.fnv import make_partitioner
 
 MapFn = Callable[[str, str], list[tuple[str, str]]]
 ReduceFn = Callable[[str, list[str]], str]

@@ -108,13 +108,13 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fused per-document curation profile: language ID + token
     statistics + quality gate, all computed in ONE scan.
 
-    Fuses the r1 queries ``doc_langid`` / ``doc_token_stats`` /
-    ``doc_quality_score`` into one registered query (the component
-    expressions are unchanged; ``langid_pred_col``/``doc_langid``
-    below keep the standalone surface). Fusing is the scale-correct
-    shape: a 100 TB curation pass computes every cheap per-doc signal
-    in a single narrow projection over the ingest scan — one pass,
-    zero shuffles — instead of re-reading the corpus once per signal.
+    Fuses the r1 language-ID, token-stats and quality-score queries
+    into one registered query (the component expressions are
+    unchanged; ``langid_pred_col`` below is the language-ID
+    expression). Fusing is the scale-correct shape: a 100 TB
+    curation pass computes every cheap per-doc signal in a single
+    narrow projection over the ingest scan — one pass, zero shuffles —
+    instead of re-reading the corpus once per signal.
     """
     docs = doc_toks(spark, sf_dir)
     n_tokens = F.size("toks")
@@ -162,17 +162,6 @@ def langid_pred_col() -> Column:
         .when(c["de"] >= c["fr"], "de")
         .otherwise("fr")
     )
-
-
-def doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standalone language-ID projection (fused into ``doc_profile``
-    for the registered/driver-checked surface; kept for direct use)."""
-    docs = doc_toks(spark, sf_dir)
-    return docs.select(
-        "doc_id",
-        langid_pred_col().alias("pred_lang"),
-        *[_hits(lang).alias(f"{lang}_hits") for lang in LANG_ORDER],
-    ).orderBy("doc_id")
 
 
 @register(
@@ -466,7 +455,7 @@ def doc_bigram_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode + map-side combined count; shuffle volume is distinct
     (doc, bigram) pairs, not the raw token stream.
     """
-    from map_reduce_spark.operators.text_rel import bigram_zip, tokens_col
+    from map_reduce_spark.operators.text_rel import bigram_zip
 
     docs = doc_toks(spark, sf_dir)
     pairs = docs.select(

@@ -3,8 +3,8 @@
 The engine exposes both APIs — DataFrame builders (operators/*.py)
 and ANSI SQL over registered views. Catalyst compiles both to the
 same plans; this module exercises the SQL path plus the constructs
-that are most natural in SQL: CTEs, GROUPING SETS, correlated
-EXISTS/IN subqueries, scalar subqueries, UNPIVOT via stack().
+that are most natural in SQL: CTEs, correlated EXISTS subqueries,
+UNPIVOT via stack().
 
 The reference has no SQL surface at all (its only "query language"
 is the Map/Reduce function pair, SURVEY.md §2.2); this is native
@@ -22,23 +22,6 @@ from map_reduce_spark.sources import register_views
 def _sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(query)
-
-
-def sql_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS (neither pure rollup nor cube)."""
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT coalesce(l_returnflag, '<ALL>') AS l_returnflag,
-               coalesce(l_linestatus, '<ALL>') AS l_linestatus,
-               round(sum(l_quantity), 2) AS sum_qty,
-               count(*) AS n_rows
-        FROM lineitem
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        ORDER BY l_returnflag, l_linestatus
-        """,
-    )
 
 
 @register(
@@ -107,22 +90,6 @@ def sql_correlated_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT 1 FROM lineitem
             WHERE l_partkey = p_partkey AND l_discount > 0.09)
         ORDER BY p_partkey
-        """,
-    )
-
-
-def sql_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar subquery in a predicate (broadcast single-row join)."""
-    return _sql(
-        spark,
-        sf_dir,
-        """
-        SELECT o_orderkey, round(o_totalprice, 2) AS o_totalprice,
-               o_orderpriority
-        FROM orders
-        WHERE o_totalprice > 1.9 * (SELECT avg(o_totalprice) FROM orders)
-        ORDER BY o_totalprice DESC, o_orderkey
-        LIMIT 25
         """,
     )
 

@@ -20,7 +20,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local core count: the ``local[N]`` master width and the default
+# static shuffle-partition count.
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
 
 
 def get_spark(
@@ -31,12 +33,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a
-    real cluster leave it unset and submit via spark-submit.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally
+    (default: this host's core count); on a real cluster leave it
+    unset and submit via spark-submit.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    nshuffle = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{CPUS}]")
+    nshuffle = shuffle_partitions or CPUS
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -78,11 +80,8 @@ def get_spark(
         # KB each), so the ceiling is bounded by ~100-200 MB on the
         # 16 GB driver heap. A production long-running session
         # (Thrift server / serving loop) raises this for exactly the
-        # same reason; env-overridable for smaller hosts.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        # same reason.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -8,14 +8,12 @@ from __future__ import annotations
 import pytest
 
 from map_reduce_spark.functions.dedup import (
-    JACCARD_THRESHOLD,
     dedup_minhash_lsh,
     dedup_ngram_jaccard_pairs,
-    dedup_simhash,
     dedup_simhash_pairs,
     shingles_col,
+    simhash_fingerprints,
 )
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -83,8 +81,9 @@ def test_minhash_jaccard_values_match_exact(spark, sf_dir):
 
 
 def test_simhash_deterministic(spark, sf_dir):
-    a = {r.doc_id: r.simhash for r in dedup_simhash(spark, sf_dir).collect()}
-    b = {r.doc_id: r.simhash for r in dedup_simhash(spark, sf_dir).collect()}
+    """A fresh, uncached fingerprint build equals the session-cached one."""
+    a = {r.doc_id: r.simhash for r in simhash_fingerprints(spark, sf_dir).collect()}
+    b = {r.doc_id: r.simhash for r in simhash_fingerprints.__wrapped__(spark, sf_dir).collect()}
     assert a == b
     assert len(a) > 0
 

@@ -19,8 +19,6 @@ cheaply:
 
 from __future__ import annotations
 
-import itertools
-
 import numpy as np
 import pandas as pd
 from hypothesis import HealthCheck, given, settings
@@ -184,25 +182,6 @@ def test_weighted_median_equals_pandas_on_expanded_multiset(pairs) -> None:
     w_arr = np.array([counts[v] for v in vals])
     expanded = pd.Series(np.repeat(v_arr, w_arr))
     assert _weighted_median(v_arr, w_arr) == expanded.median()
-
-
-@given(
-    st.lists(st.floats(-1e6, 1e6, allow_nan=False), min_size=1, max_size=60),
-    st.floats(0.0, 1.0),
-)
-def test_interp_matches_duckdb_quantile_cont(vals, q) -> None:
-    """_interp (the exact-percentile query's interpolation) must be
-    bit-identical to DuckDB's quantile_cont on the same multiset."""
-    import duckdb
-
-    from map_reduce_spark.operators.relational import _interp
-
-    h = (len(vals) - 1) * q
-    got = _interp(sorted((v, 1) for v in vals), h)
-    want = duckdb.execute(
-        "SELECT quantile_cont(v, ?) FROM (SELECT unnest(?) AS v)", [q, vals]
-    ).fetchone()[0]
-    assert got == want
 
 
 def test_repetition_stats_pandas_equals_fold(spark) -> None:

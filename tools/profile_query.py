@@ -1,7 +1,8 @@
-"""Profile one registered query: run it through the noop sink with the
-Spark UI enabled, then dump per-stage metrics (duration, task time,
-shuffle read/write, input bytes, Python/GC time) from the UI REST API —
-the guide's §7.1 empirical loop, scripted.
+"""Profile one registered query: run it through the noop sink with
+Spark's event log on, then print per-stage metrics (tasks, executor
+run/CPU/GC time, input and shuffle bytes) for the last iteration —
+the guide's §7.1 empirical loop, scripted. The event log is folded by
+``perfbench/tracing.read_event_logs``, the benchmark's own reader.
 
 Usage: python tools/profile_query.py [--sf-dir DIR] [--iters N] name
 """
@@ -9,17 +10,17 @@ Usage: python tools/profile_query.py [--sf-dir DIR] [--iters N] name
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
+import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_spark.plans.transient import release_transient
 from map_reduce_spark.registry import load_all
 from map_reduce_spark.session import get_spark
+from perfbench.tracing import read_event_logs
 
 
 def main() -> None:
@@ -30,87 +31,61 @@ def main() -> None:
     args = ap.parse_args()
 
     specs = load_all()
-    spark = get_spark("profile", extra_conf={"spark.ui.enabled": "true"})
+    with tempfile.TemporaryDirectory(prefix="profile_query_") as log_dir:
+        spark = get_spark("profile", extra_conf={
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.dir": "file://" + log_dir,
+            "spark.eventLog.compress": "false",
+        })
+        cores = spark.sparkContext.defaultParallelism
 
-    def execute(df) -> None:
-        df.write.format("noop").mode("overwrite").save()
-        release_transient()
+        def execute(df) -> None:
+            df.write.format("noop").mode("overwrite").save()
+            release_transient()
 
-    execute(specs["q6_forecast_revenue"].builder(spark, args.sf_dir))
+        execute(specs["q6_forecast_revenue"].builder(spark, args.sf_dir))
 
-    # run the target; first run warms, the last run is profiled
-    times = []
-    for i in range(args.iters):
-        t0 = time.perf_counter()
-        mark_jobs_from = json.loads(
-            urllib.request.urlopen(
-                "http://localhost:4040/api/v1/applications"
-            ).read()
-        )[0]["id"]
-        spark.sparkContext.setJobGroup(f"iter{i}", args.name)
-        execute(specs[args.name].builder(spark, args.sf_dir))
-        times.append(round(time.perf_counter() - t0, 3))
-        spark.sparkContext.setJobGroup(None, None)
+        # run the target; first run warms, the last run is profiled
+        times = []
+        for i in range(args.iters):
+            t0 = time.perf_counter()
+            spark.sparkContext.setJobGroup(f"iter{i}", args.name)
+            execute(specs[args.name].builder(spark, args.sf_dir))
+            times.append(round(time.perf_counter() - t0, 3))
+        spark.stop()  # flushes the event log
+        fold = read_event_logs(log_dir)
 
-    app = json.loads(
-        urllib.request.urlopen("http://localhost:4040/api/v1/applications").read()
-    )[0]["id"]
-    jobs = json.loads(
-        urllib.request.urlopen(
-            f"http://localhost:4040/api/v1/applications/{app}/jobs"
-        ).read()
+    jobs = sorted(
+        (j for j in fold.jobs.values() if j.group == f"iter{args.iters - 1}"),
+        key=lambda j: j.job_id,
     )
-    last_iter = f"iter{args.iters - 1}"
-    jobs = [j for j in jobs if j.get("jobGroup") == last_iter]
+    stages = sorted(
+        (st for j in jobs for st in fold.job_stages(j)),
+        key=lambda st: -st.executor_run_ms,
+    )
     print(f"query={args.name} iters={times}")
     print(f"jobs in last iter: {len(jobs)}")
-    stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-    rows = []
-    for sid in stage_ids:
-        try:
-            st = json.loads(
-                urllib.request.urlopen(
-                    f"http://localhost:4040/api/v1/applications/{app}/stages/{sid}"
-                ).read()
-            )[0]
-        except Exception:
-            continue
-        if st["status"] == "SKIPPED":
-            continue
-        dur = (st.get("executorRunTime") or 0) / 1000.0
-        rows.append(
-            (
-                sid,
-                st["name"].split("\n")[0][:60],
-                st["numCompleteTasks"],
-                round(dur, 2),
-                round((st.get("executorCpuTime") or 0) / 1e9, 2),
-                round((st.get("jvmGcTime") or 0) / 1000.0, 2),
-                st.get("inputBytes", 0) // 1024,
-                st.get("shuffleReadBytes", 0) // 1024,
-                st.get("shuffleWriteBytes", 0) // 1024,
-                round((st.get("firstTaskLaunchedTime") is not None) and 0 or 0, 2),
-            )
-        )
-    rows.sort(key=lambda r: -r[3])
     print(
-        f"{'sid':>5} {'tasks':>5} {'run_s':>7} {'cpu_s':>7} {'gc_s':>5} "
-        f"{'in_KB':>8} {'shR_KB':>8} {'shW_KB':>8}  name"
+        f"{'stage':>7} {'tasks':>5} {'wall_s':>7} {'run_s':>7} {'cpu_s':>7} {'gc_s':>5} "
+        f"{'in_KB':>8} {'shR_KB':>8} {'shW_KB':>8}  python"
     )
-    for r in rows[:25]:
+    for st in stages[:25]:
         print(
-            f"{r[0]:>5} {r[2]:>5} {r[3]:>7} {r[4]:>7} {r[5]:>5} "
-            f"{r[6]:>8} {r[7]:>8} {r[8]:>8}  {r[1]}"
+            f"{st.stage_id:>5}.{st.attempt:<1} {st.n_tasks:>5} {st.duration_s:>7.2f} "
+            f"{st.executor_run_ms / 1e3:>7.2f} {st.executor_cpu_ns / 1e9:>7.2f} "
+            f"{st.gc_ms / 1e3:>5.2f} {st.input_bytes // 1024:>8.0f} "
+            f"{st.shuffle_read_bytes // 1024:>8.0f} {st.shuffle_write_bytes // 1024:>8.0f}  {st.python}"
         )
-    total_run = sum(r[3] for r in rows)
-    print(f"sum executorRunTime over stages: {round(total_run,2)} s "
-          f"(wall {times[-1]} s x 32 cores = {round(times[-1]*32,1)} core-s)")
+    total_run = sum(st.executor_run_ms for st in stages) / 1e3
+    print(f"sum executorRunTime over stages: {total_run:.2f} s "
+          f"(wall {times[-1]} s x {cores} cores = {times[-1] * cores:.1f} core-s)")
     # job-level wall timeline to expose driver-side gaps
-    print("\njob timeline (last iter):")
-    for j in sorted(jobs, key=lambda j: j["jobId"]):
-        t0 = j.get("submissionTime", "")
-        t1 = j.get("completionTime", "")
-        print(f"  job {j['jobId']:>4} {j['status']:<9} {t0[11:23]} -> {t1[11:23]} stages={j['stageIds']}")
+    print("\njob timeline (last iter, ms from first submit):")
+    base = jobs[0].submit_ms if jobs else 0
+    for j in jobs:
+        end = "-" if j.complete_ms is None else f"{j.complete_ms - base:.0f}"
+        status = "ok" if j.succeeded else "FAILED"
+        print(f"  job {j.job_id:>4} {status:<6} {j.submit_ms - base:>7.0f} -> {end:>7} stages={j.stage_ids}")
 
 
 if __name__ == "__main__":
