@@ -45,46 +45,49 @@ def test_fnv32a_known_vectors():
 
 @pytest.mark.parametrize("app", ["wc", "indexer", "concat", "filecount"])
 def test_distributed_equals_sequential(spark, corpus, tmp_path, app):
-    """Three-way differential golden: the reference's defining check.
+    """Differential golden: the reference's defining check.
 
-    sequential oracle ≡ 1-partition distributed ≡ 10-partition
-    distributed, compared as sorted line multisets.
+    sequential oracle ≡ 1-, 10- and 13-bucket distributed runs, compared
+    as sorted line multisets. 10 and 13 buckets exceed the test
+    session's 4 cores, so reduce tasks own several buckets each.
     """
     map_fn, reduce_fn = APPS[app]
     inputs = f"{corpus}/pg-*.txt"
 
     seq = sorted_output(MapReduceJob(inputs, map_fn, reduce_fn).run_sequential())
-    one = sorted_output(
-        MapReduceJob(inputs, map_fn, reduce_fn, n_reduce=1).run(
-            spark, str(tmp_path / f"{app}_p1")
-        )
-    )
-    ten = sorted_output(
-        MapReduceJob(inputs, map_fn, reduce_fn, n_reduce=10).run(
-            spark, str(tmp_path / f"{app}_p10")
-        )
-    )
-    assert seq == one == ten
     assert len(seq) > 0
+    for n_reduce in (1, 10, 13):
+        got = sorted_output(
+            MapReduceJob(inputs, map_fn, reduce_fn, n_reduce=n_reduce).run(
+                spark, str(tmp_path / f"{app}_p{n_reduce}")
+            )
+        )
+        assert got == seq, n_reduce
 
 
 def test_output_file_layout(spark, corpus, tmp_path):
-    """E8 parity: one mr-out-<r> file per reduce partition, lines
-    '<key> <value>', keys ascending within each partition, and each
-    key in its FNV-designated partition (worker.go:96-138)."""
+    """E8 parity: exactly one mr-out-<r> file per bucket and nothing
+    else, lines '<key> <value>', keys ascending within each file, each
+    key in its FNV-designated bucket (worker.go:96-138), and the files
+    together equal the sequential oracle's output. Covers fewer buckets
+    than cores (1), more (5, 10), and more than two per task (13)."""
     map_fn, reduce_fn = APPS["wc"]
-    out = tmp_path / "wc_layout"
-    MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn, n_reduce=10).run(
-        spark, str(out)
-    )
-    files = sorted(os.listdir(out))
-    assert files == [f"mr-out-{r}" for r in range(10)][: len(files)] or len(files) == 10
-    for r in range(10):
-        lines = (out / f"mr-out-{r}").read_text().splitlines()
-        keys = [line.split(" ")[0] for line in lines]
-        assert keys == sorted(keys)  # per-partition ascending sort (E6)
-        for k in keys:
-            assert ihash(k) % 10 == r  # exact FNV placement (E3)
+    job = MapReduceJob(f"{corpus}/pg-*.txt", map_fn, reduce_fn)
+    seq = sorted_output(job.run_sequential())
+    for n_reduce in (1, 5, 10, 13):
+        job.n_reduce = n_reduce
+        out = tmp_path / f"wc_layout_{n_reduce}"
+        returned = job.run(spark, str(out))
+        assert set(os.listdir(out)) == {f"mr-out-{r}" for r in range(n_reduce)}
+        all_lines = []
+        for r in range(n_reduce):
+            lines = (out / f"mr-out-{r}").read_text(encoding="utf-8").splitlines()
+            keys = [line.split(" ")[0] for line in lines]
+            assert keys == sorted(keys)  # per-bucket ascending sort (E6)
+            for k in keys:
+                assert ihash(k) % n_reduce == r  # exact FNV placement (E3)
+            all_lines.extend(lines)
+        assert sorted_output(all_lines) == sorted_output(returned) == seq
 
 
 def test_wc_counts_are_exact(spark, corpus, tmp_path):
@@ -135,9 +138,15 @@ def test_fault_tolerance_reexecution(spark, corpus, tmp_path):
 @pytest.mark.parametrize("seed", range(5))
 def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
     """test-mr-many.sh analogue (reference loops the crash suite to
-    catch retry races): vary WHICH maps and WHICH reduce partitions
-    crash on their first attempt across seeds; every variant must
-    still match the sequential oracle exactly."""
+    catch retry races): vary WHICH maps and WHICH reduce buckets crash
+    on their first attempt across seeds; every variant must still
+    match the sequential oracle exactly.
+
+    Crashes are chosen by bucket, not by Spark partition: 5 buckets
+    pack into 4 reduce tasks on the test session. Spark drops the
+    accumulator updates of failed attempts, so the accumulators count
+    calls on a crash site's *retry* attempts: above 0 means a crash
+    fired and its task re-ran."""
     import random
 
     from pyspark import TaskContext
@@ -146,27 +155,25 @@ def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
     crash_files = tuple(
         rng.sample(["alpha", "beta", "gamma", "delta", "epsilon", "zeta"], k=2)
     )
-    crash_parts = set(rng.sample(range(5), k=2))
+    crash_buckets = set(rng.sample(range(5), k=2))
+    map_retries = spark.sparkContext.accumulator(0)
+    reduce_retries = spark.sparkContext.accumulator(0)
     map_fn, reduce_fn = APPS["wc"]
 
     def crashy_map(filename: str, contents: str):
         ctx = TaskContext.get()
-        if (
-            ctx is not None
-            and ctx.attemptNumber() == 0
-            and any(filename.endswith(f"{f}.txt") for f in crash_files)
-        ):
-            raise RuntimeError(f"injected map crash (seed={seed})")
+        if any(filename.endswith(f"{f}.txt") for f in crash_files):
+            if ctx.attemptNumber() == 0:
+                raise RuntimeError(f"injected map crash (seed={seed})")
+            map_retries.add(1)
         return map_fn(filename, contents)
 
     def crashy_reduce(key: str, values: list[str]) -> str:
         ctx = TaskContext.get()
-        if (
-            ctx is not None
-            and ctx.attemptNumber() == 0
-            and ctx.partitionId() in crash_parts
-        ):
-            raise RuntimeError(f"injected reduce crash (seed={seed})")
+        if ihash(key) % 5 in crash_buckets:
+            if ctx.attemptNumber() == 0:
+                raise RuntimeError(f"injected reduce crash (seed={seed})")
+            reduce_retries.add(1)
         return reduce_fn(key, values)
 
     inputs = f"{corpus}/pg-*.txt"
@@ -177,6 +184,81 @@ def test_fault_tolerance_many_seeds(spark, corpus, tmp_path, seed):
         )
     )
     assert got == seq
+    assert map_retries.value > 0
+    assert reduce_retries.value > 0
+
+
+def test_retry_commits_only_successful_attempt(spark, corpus, tmp_path):
+    """Commit protocol under a mid-task crash: with 5 buckets on 4
+    cores, reduce task 0 owns buckets 0 and 4. Its first attempt writes
+    bucket 0's temp file, then raises inside bucket 4. Only the retry's
+    files may be committed, and no temp entry may survive the job."""
+    from pyspark import TaskContext
+
+    retries = spark.sparkContext.accumulator(0)
+    map_fn, reduce_fn = APPS["wc"]
+
+    def crash_in_second_bucket(key: str, values: list[str]) -> str:
+        if ihash(key) % 5 == 4:
+            if TaskContext.get().attemptNumber() == 0:
+                raise RuntimeError("injected reduce crash after bucket 0's write")
+            retries.add(1)
+        return reduce_fn(key, values)
+
+    inputs = f"{corpus}/pg-*.txt"
+    out = tmp_path / "retry_commit"
+    lines = MapReduceJob(inputs, map_fn, crash_in_second_bucket, n_reduce=5).run(
+        spark, str(out)
+    )
+    assert retries.value > 0
+    seq = sorted_output(MapReduceJob(inputs, map_fn, reduce_fn).run_sequential())
+    assert sorted(os.listdir(out)) == [f"mr-out-{r}" for r in range(5)]
+    on_disk = [
+        line
+        for r in range(5)
+        for line in (out / f"mr-out-{r}").read_text(encoding="utf-8").splitlines()
+    ]
+    assert sorted_output(lines) == sorted_output(on_disk) == seq
+
+
+def _stage_task_counts(sc, group: str) -> list[int]:
+    """Task count of each stage of the one job run under ``group``, in
+    stage order (the status store fills asynchronously, so poll)."""
+    import time
+
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while time.monotonic() < deadline:
+        jobs = tracker.getJobIdsForGroup(group)
+        info = tracker.getJobInfo(jobs[0]) if len(jobs) == 1 else None
+        if info is not None and info.status == "SUCCEEDED":
+            stages = [tracker.getStageInfo(s) for s in sorted(info.stageIds)]
+            if all(st is not None for st in stages):
+                return [st.numTasks for st in stages]
+        time.sleep(0.05)
+    raise AssertionError(f"no finished job recorded for group {group}")
+
+
+@pytest.mark.parametrize("n_reduce,n_files", [(10, 6), (1, 6), (10, 2)])
+def test_one_task_wave_per_stage(spark, corpus, tmp_path, n_reduce, n_files):
+    """A job runs min(#files, cores) map tasks and min(n_reduce, cores)
+    reduce tasks: one wave each on the 4-core test session."""
+    from glob import glob
+
+    sc = spark.sparkContext
+    cores = sc.defaultParallelism
+    assert cores == 4
+    inputs = sorted(glob(f"{corpus}/pg-*.txt"))[:n_files]
+    group = f"compat-waves-{n_reduce}-{n_files}"
+    sc.setJobGroup(group, "compat task counts")
+    try:
+        MapReduceJob(inputs, *APPS["wc"], n_reduce=n_reduce).run(
+            spark, str(tmp_path / "waves")
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert _stage_task_counts(sc, group) == [min(n_files, cores), min(n_reduce, cores)]
 
 
 def test_early_exit_atomic_visibility(spark, corpus, tmp_path):

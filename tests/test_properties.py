@@ -46,7 +46,7 @@ def test_partitioner_in_range_and_deterministic(key: str, n: int) -> None:
     part = make_partitioner(n)
     b = part(key)
     assert 0 <= b < n
-    assert b == part(key) == ihash(key) % n
+    assert b == part(key) == ihash(key) % n  # second call served from the memo
     assert 0 <= ihash(key) <= 0x7FFFFFFF
 
 
