@@ -39,9 +39,10 @@ def sf_from_dir(path: str) -> float:
 def execute(df) -> None:
     df.write.format("noop").mode("overwrite").save()
     # Release the query's plan-internal persists (basket arrays,
-    # DSIR bucket counts, ...) so a 160+-query session never leans on
-    # LRU eviction; session-scoped index caches are not enrolled and
-    # survive, as intended.
+    # DSIR bucket counts, ...) so each lives one query. Session-scoped
+    # index caches are not enrolled and survive; this full drain is
+    # also the point where they are trimmed to the cache's byte budget,
+    # least recently used first.
     release_transient()
 
 

@@ -93,10 +93,6 @@ KHOP_SEED_NATION = "NATION_3"
 KHOP_HOPS = 3
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _purchase_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (c, s) customer-supplier purchase relation.
 
@@ -106,8 +102,8 @@ def _purchase_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct suppliers per customer (~40 at sf0.1), far below the
     lineitem row count.
     """
-    orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     return (
         orders.join(li, orders.o_orderkey == li.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
@@ -400,7 +396,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _triangle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= TRI_MIN_QTY)
         .select(
             "l_orderkey",
@@ -624,8 +620,8 @@ def graph_khop_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier multiplicatively.
     """
     edges = _bipartite_edges(spark, sf_dir)
-    supp = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _t(spark, sf_dir, "nation").filter(F.col("n_name") == KHOP_SEED_NATION)
+    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    nat = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == KHOP_SEED_NATION)
     seeds = (
         supp.join(F.broadcast(nat), supp.s_nationkey == nat.n_nationkey)
         .select((F.col("s_suppkey") * 2 + 1).alias("nid"))

@@ -39,10 +39,6 @@ from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Aggregation / scan / filter
 # ---------------------------------------------------------------------------
@@ -72,7 +68,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses ~all rows map-side, so shuffle volume is O(partitions).
     The shipdate filter pushes down to the parquet scan.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
@@ -109,7 +105,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: all four predicates push to the parquet scan (min/max row-
     group skipping); the aggregate is a single partial+final sum.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1994-01-01").cast("timestamp"))
@@ -156,9 +152,9 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (no global sort).
     """
     cutoff = F.lit("1995-03-15").cast("timestamp")
-    cust = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
+    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < cutoff)
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > cutoff)
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -194,12 +190,12 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor, so those two joins shuffle on orderkey/custkey; the final
     25-group aggregate is map-side combined.
     """
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    nation = _t(spark, sf_dir, "nation")
-    supplier = _t(spark, sf_dir, "supplier")
-    customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    nation = load_table(spark, sf_dir, "nation")
+    supplier = load_table(spark, sf_dir, "supplier")
+    customer = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
 
     dim = (
         supplier.join(F.broadcast(nation), supplier.s_nationkey == nation.n_nationkey)
@@ -243,10 +239,10 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle-join on their keys (both grow with sf); nation broadcasts;
     top-k via TakeOrderedAndProject.
     """
-    cust = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    orders = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    cust = load_table(spark, sf_dir, "customer")
+    nation = load_table(spark, sf_dir, "nation")
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(cust, orders.o_custkey == cust.c_custkey)
@@ -277,8 +273,8 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     part grows with scale factor (fact-sized at 100 TB), so the join
     shuffles on partkey; only p_partkey/p_type are read (pruned scan).
     """
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     promo = F.when(F.col("p_type").startswith("PROMO"), rev).otherwise(F.lit(0.0))
     return (
@@ -304,8 +300,8 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_outer_order_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-outer join preserving order-less customers (NULL-aware agg)."""
-    cust = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
+    cust = load_table(spark, sf_dir, "customer")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         cust.join(orders, cust.c_custkey == orders.o_custkey, "left")
         .groupBy("c_custkey")
@@ -335,7 +331,7 @@ def join_outer_order_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy totals (flag, flag+status, grand total)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count(F.lit(1)).alias("n_rows"))
@@ -362,7 +358,7 @@ def agg_rollup_returnflag(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_distinct_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-column exact distinct aggregation (expand + two-phase agg)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_suppkey")
         .agg(
@@ -390,8 +386,8 @@ def agg_distinct_parts_per_supplier(spark: SparkSession, sf_dir: str) -> DataFra
 )
 def setop_nation_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set operations: INTERSECT / EXCEPT of customer vs supplier nations."""
-    cust_n = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
-    supp_n = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
+    cust_n = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("n_nationkey"))
+    supp_n = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("n_nationkey"))
     both = cust_n.intersect(supp_n).select(F.lit("both").alias("side"), "n_nationkey")
     only = cust_n.subtract(supp_n).select(F.lit("customer_only").alias("side"), "n_nationkey")
     return both.unionAll(only).orderBy("side", "n_nationkey")
@@ -417,7 +413,7 @@ def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each partition keeps a k-heap; driver merges k*partitions
     rows — no global shuffle sort at any data size.
     """
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(
             "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("o_totalprice"), "o_orderpriority"
@@ -441,7 +437,7 @@ def topk_orders_by_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_date_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date bucketing: monthly order volume (date_trunc + aggregates)."""
-    orders = _t(spark, sf_dir, "orders")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.groupBy(F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM-dd").alias("order_month"))
         .agg(
@@ -514,7 +510,7 @@ def agg_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # big to cache economically, drop this persist and pay the extra
     # scans; correctness and boundedness are unaffected.
     li = transient_persist(
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_returnflag", "l_quantity", "l_extendedprice")
     )
 

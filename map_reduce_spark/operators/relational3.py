@@ -38,10 +38,6 @@ from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 def _revenue() -> F.Column:
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
@@ -82,26 +78,26 @@ def q7ish_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle's probe output. The final group-by has O(pairs × years)
     groups — map-side combined to almost nothing.
     """
-    nation = _t(spark, sf_dir, "nation")
+    nation = load_table(spark, sf_dir, "nation")
     supp_dim = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .filter(F.col("n_name").isin("NATION_1", "NATION_2"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust_dim = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .filter(F.col("n_name").isin("NATION_1", "NATION_2"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
     return (
         li.join(F.broadcast(supp_dim), li.l_suppkey == supp_dim.s_suppkey)
-        .join(_t(spark, sf_dir, "orders"), li.l_orderkey == F.col("o_orderkey"))
+        .join(load_table(spark, sf_dir, "orders"), li.l_orderkey == F.col("o_orderkey"))
         .join(cust_dim, F.col("o_custkey") == cust_dim.c_custkey)
         .filter(F.col("supp_nation") != F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
@@ -147,25 +143,25 @@ def q8ish_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders/customer shuffle on their keys; supplier/nation/region
     broadcast. Group count = years, so the final agg is trivial.
     """
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    part = _t(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
+    nation = load_table(spark, sf_dir, "nation")
+    region = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY").select("p_partkey")
     supp_dim = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(F.broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     cust_dim = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .join(F.broadcast(nation), F.col("c_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .select("c_custkey")
     )
-    orders = _t(spark, sf_dir, "orders").filter(
+    orders = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1995-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     volume = _revenue().alias("volume")
     return (
         li.join(part, li.l_partkey == part.p_partkey)
@@ -214,16 +210,16 @@ def q9ish_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier⋈nation broadcasts. Groups = nations × years.
     """
     part = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains("widget"))
         .select("p_partkey", "p_retailprice")
     )
     supp_dim = (
-        _t(spark, sf_dir, "supplier")
-        .join(F.broadcast(_t(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
+        load_table(spark, sf_dir, "supplier")
+        .join(F.broadcast(load_table(spark, sf_dir, "nation")), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     amount = (
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
         - F.lit(0.6) * F.col("p_retailprice") * F.col("l_quantity")
@@ -231,7 +227,7 @@ def q9ish_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(part, li.l_partkey == part.p_partkey)
         .join(F.broadcast(supp_dim), li.l_suppkey == supp_dim.s_suppkey)
-        .join(_t(spark, sf_dir, "orders"), li.l_orderkey == F.col("o_orderkey"))
+        .join(load_table(spark, sf_dir, "orders"), li.l_orderkey == F.col("o_orderkey"))
         .select("nation", F.year("o_orderdate").alias("o_year"), amount)
         .groupBy("nation", "o_year")
         .agg(F.round(F.sum("amount"), 2).alias("sum_profit"))
@@ -264,9 +260,9 @@ def q13ish_order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFra
     partitioning as the join → no extra exchange under AQE); second
     agg reduces to O(max orders per customer) groups.
     """
-    cust = _t(spark, sf_dir, "customer").select("c_custkey")
+    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
     orders = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderpriority") != "4-NOT SPECIFIED")
         .select("o_custkey", "o_orderkey")
     )
@@ -309,7 +305,7 @@ def q15ish_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rounding happens before the max comparison on both sides so ties
     are decided on identical values.
     """
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
     )
@@ -325,7 +321,7 @@ def q15ish_top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         revenue.join(F.broadcast(top), F.col("total_revenue") == F.col("max_revenue"))
         .join(
-            F.broadcast(_t(spark, sf_dir, "supplier")),
+            F.broadcast(load_table(spark, sf_dir, "supplier")),
             F.col("supplier_no") == F.col("s_suppkey"),
         )
         .select("s_suppkey", "s_name", "total_revenue")
@@ -362,8 +358,8 @@ def q17ish_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame
     are small, so the double average is exact and the `<` comparison
     cannot straddle an FP boundary.
     """
-    part = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#3").select("p_partkey")
+    li = load_table(spark, sf_dir, "lineitem")
     thresholds = (
         li.join(part, li.l_partkey == part.p_partkey)
         .groupBy(li.l_partkey.alias("t_partkey"))
@@ -402,8 +398,8 @@ def q19ish_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     the partkey shuffle join; the full disjunction evaluates as the
     join filter. One decomposable sum, one result row.
     """
-    part = _t(spark, sf_dir, "part")
-    li = _t(spark, sf_dir, "lineitem")
+    part = load_table(spark, sf_dir, "part")
+    li = load_table(spark, sf_dir, "lineitem")
     joined = li.join(part, li.l_partkey == part.p_partkey)
     disj = (
         ((F.col("p_brand") == "Brand#1") & F.col("p_size").between(1, 15)
@@ -473,7 +469,7 @@ def q21ish_sole_return_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one that survives 100 TB.
     """
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_returnflag")
         .repartition("l_orderkey")
     )
@@ -488,7 +484,7 @@ def q21ish_sole_return_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         per_order.filter((F.col("n_supp") > 1) & (F.col("n_r_supp") == 1))
         .join(
-            F.broadcast(_t(spark, sf_dir, "supplier")),
+            F.broadcast(load_table(spark, sf_dir, "supplier")),
             F.col("sole_r_supp") == F.col("s_suppkey"),
         )
         .groupBy("s_name")
@@ -534,7 +530,7 @@ def fuzzy_join_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     DF-cap argument as the shingle index), and the quadratic verify
     runs only on candidate pairs.
     """
-    names = _t(spark, sf_dir, "part").select("p_name").distinct()
+    names = load_table(spark, sf_dir, "part").select("p_name").distinct()
     # substring with a dynamic start needs expr: build (name, gram) pairs
     grams = names.select(
         "p_name",

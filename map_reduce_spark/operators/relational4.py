@@ -33,17 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from map_reduce_spark.operators.relational3 import _revenue
 from map_reduce_spark.plans.transient import transient_persist
 from map_reduce_spark.registry import register
 from map_reduce_spark.sources import load_table
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
-def _revenue() -> F.Column:
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
 @register(
@@ -92,19 +85,19 @@ def q11ish_concentrated_part_values(spark: SparkSession, sf_dir: str) -> DataFra
     at sf0.1 (637327.075 straddling the boundary) before this.
     """
     asia_supp = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .join(
-            F.broadcast(_t(spark, sf_dir, "region")),
+            F.broadcast(load_table(spark, sf_dir, "region")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .filter(F.col("r_name") == "ASIA")
         .select("s_suppkey")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     pv = (
         li.join(F.broadcast(asia_supp), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
@@ -163,12 +156,12 @@ def q16ish_supplier_part_relationships(spark: SparkSession, sf_dir: str) -> Data
     final exchange.
     """
     bad_supp = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
     part = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(
             (F.col("p_brand") != "Brand#1")
             & (F.col("p_type") != "ECONOMY")
@@ -176,7 +169,7 @@ def q16ish_supplier_part_relationships(spark: SparkSession, sf_dir: str) -> Data
         )
         .select("p_partkey", "p_brand", "p_type", "p_size")
     )
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     return (
         li.join(F.broadcast(bad_supp), li.l_suppkey == bad_supp.s_suppkey, "left_anti")
         .join(part, li.l_partkey == part.p_partkey)
@@ -238,7 +231,7 @@ def q20ish_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
     integers in the fixture, so the 0.5x threshold compares exactly.
     """
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .filter(
             (F.col("l_shipdate") >= F.lit("1995-01-01").cast("timestamp"))
             & (F.col("l_shipdate") < F.lit("1996-01-01").cast("timestamp"))
@@ -254,7 +247,7 @@ def q20ish_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
         .withColumnRenamed("l_partkey", "pt_partkey")
     )
     named_parts = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").contains("a"))
         .select("p_partkey")
     )
@@ -270,9 +263,9 @@ def q20ish_dominant_part_suppliers(spark: SparkSession, sf_dir: str) -> DataFram
         .distinct()
     )
     return (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .join(
-            F.broadcast(_t(spark, sf_dir, "nation")),
+            F.broadcast(load_table(spark, sf_dir, "nation")),
             F.col("s_nationkey") == F.col("n_nationkey"),
         )
         .filter(F.col("n_name") == "NATION_3")

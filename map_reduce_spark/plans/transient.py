@@ -15,7 +15,9 @@ persists the frame AND enrolls it for release. Harness loops
 materializing each query, so every transient cache lives exactly one
 query. Deliberately session-scoped caches (the retrieval index
 builders' memoized frames, similarity.py's trained codebooks) do NOT
-enroll — cross-query reuse is their point.
+enroll — cross-query reuse is their point. A full drain is also the
+one point where that session cache is trimmed to its byte budget
+(``sources.cache.query_boundary``).
 
 Consumers OUTSIDE the harness loops (pytest sessions, notebooks,
 library use) should wrap build+materialize in ``transient_scope()``
@@ -82,19 +84,12 @@ def release_transient(mark: int = 0) -> int:
     """Unpersist (non-blocking) every frame enrolled at or after list
     position ``mark`` (default: all); returns the count released.
 
-    Also marks a QUERY BOUNDARY for the session cache — but only on
-    FULL drains (``mark == 0``): the recent-working-set eviction
-    protection exists for index-chain touches inside one query's
-    build (see sources/cache.py), and a partial release from a
-    nested ``transient_scope(mark>0)`` exited between an outer
-    caller's index touches must NOT clear that protection mid-build
-    (ADVICE r11). Harness loops call with the default ``mark=0``
-    between queries, which is exactly the protection's intended
-    scope."""
-    if mark == 0:
-        from map_reduce_spark.sources import cache as _session_cache
-
-        _session_cache.query_boundary()
+    A FULL drain (``mark == 0``) is a query boundary: after the
+    transients are released it trims the session cache to its byte
+    budget (``sources.cache.query_boundary``). A partial release from a
+    nested ``transient_scope`` (``mark > 0``) may run between an outer
+    caller's build and materialize, so it trims nothing. Harness loops
+    call with the default ``mark=0`` between queries."""
     n = max(0, len(_LIVE) - mark)
     while len(_LIVE) > mark:
         df = _LIVE.pop()
@@ -102,6 +97,10 @@ def release_transient(mark: int = 0) -> int:
             df.unpersist()
         except Exception:
             pass  # session already stopped — nothing to release
+    if mark == 0:
+        from map_reduce_spark.sources import cache as _session_cache
+
+        _session_cache.query_boundary()
     return n
 
 
@@ -110,7 +109,9 @@ def transient_scope():
     """Release-on-exit scope for non-harness consumers: frames
     enrolled INSIDE the ``with`` block are unpersisted on exit;
     enrollments from before the block are untouched (so a nested
-    scope cannot drop an outer plan's load-bearing caches)."""
+    scope cannot drop an outer plan's load-bearing caches). Exiting an
+    outermost scope is a full drain, so it also trims the session
+    cache."""
     mark = len(_LIVE)
     try:
         yield

@@ -2,6 +2,9 @@
 ``class`` under ``map_reduce_spark/`` must be referenced somewhere in
 the repo's Python outside its own definition. A ``@register``-decorated
 builder counts as referenced: the registry is its caller.
+
+Knob census: the environment variables the package reads are a fixed
+set, so a new knob has to be a deliberate edit of this file.
 """
 
 from __future__ import annotations
@@ -49,3 +52,36 @@ def test_every_package_def_is_referenced() -> None:
                 defs.append((f"{path.relative_to(ROOT)}::{node.name}", node.name))
     dead = [where for where, name in defs if uses[name] <= 0]
     assert not dead, f"unreferenced top-level defs: {dead}"
+
+
+# Deployment settings only: the worker count, the master URL and the
+# driver heap.
+ENV_KNOBS = {"SPARK_GRAFT_CPUS", "SPARK_GRAFT_MASTER", "SPARK_GRAFT_DRIVER_MEM"}
+
+
+def _env_reads(tree: ast.AST) -> set[str]:
+    """Names read via ``os.environ.get(..)``, ``os.environ[..]`` or
+    ``os.getenv(..)``; a non-literal name is recorded as ``<dynamic>``."""
+    def is_environ(node: ast.AST) -> bool:
+        return isinstance(node, ast.Attribute) and node.attr == "environ"
+
+    out = set()
+    for n in ast.walk(tree):
+        key = None
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and n.args:
+            f = n.func
+            if (f.attr == "get" and is_environ(f.value)) or f.attr == "getenv":
+                key = n.args[0]
+        elif isinstance(n, ast.Subscript) and is_environ(n.value):
+            key = n.slice
+        if key is not None:
+            literal = isinstance(key, ast.Constant) and isinstance(key.value, str)
+            out.add(key.value if literal else "<dynamic>")
+    return out
+
+
+def test_env_knob_census() -> None:
+    reads: set[str] = set()
+    for path in PACKAGE.rglob("*.py"):
+        reads |= _env_reads(ast.parse(path.read_text(), filename=str(path)))
+    assert reads == ENV_KNOBS

@@ -1,18 +1,19 @@
-"""Session-cache byte budget (r9 verdict item 4): the global LRU
-evicts cold index frames once total persisted bytes exceed the
-configured budget — except the most-recently-touched working set
-(dependent index chains touch parent then child, and evicting the
-parent mid-chain is rebuild thrash, r10) — and an evicted entry
-transparently rebuilds on the next request, so a single long-lived
-session cannot accumulate unbounded index caches (the sf10
-whole-registry OOM class)."""
+"""Session-cache byte budget: the cache is trimmed at one point, the
+per-query boundary (a full ``release_transient`` drain), where the
+least-recently-used entries are unpersisted until the persisted bytes
+fit the budget. Between boundaries nothing is evicted, so an index
+chain under construction keeps its parents, and a hit is a dict
+lookup with no JVM call. An evicted entry transparently rebuilds on
+the next request."""
 
 from __future__ import annotations
 
+import pytest
+
+from map_reduce_spark.sources import cache
+
 
 def _make_builders(spark, n, calls):
-    from map_reduce_spark.sources.cache import session_cached
-
     builders = []
     for i in range(n):
         def mk(i=i):
@@ -22,77 +23,110 @@ def _make_builders(spark, n, calls):
 
             # distinct qualname BEFORE decoration — it is the cache key
             build.__qualname__ = f"budget_probe_{i}"
-            return session_cached(build)
+            return cache.session_cached(build)
 
         builders.append(mk())
     return builders
 
 
-def _drop_probes(prefix="/bud"):
-    from map_reduce_spark.sources.cache import _LRU
-
-    for key in [k for k in _LRU if k[1].startswith(prefix)]:
-        _LRU.pop(key).unpersist()
+def _live(prefix):
+    return [k for k in cache._LRU if k[1] == prefix]
 
 
-def test_budget_evicts_cold_entries_and_rebuilds(spark, monkeypatch):
-    monkeypatch.setenv("MRS_SESSION_CACHE_BUDGET_BYTES", "1")
-    from map_reduce_spark.sources.cache import _KEEP_RECENT, _LRU
+def _drop_probes(prefix):
+    for key in _live(prefix):
+        cache._LRU.pop(key).unpersist()
 
+
+@pytest.fixture
+def tiny_budget(monkeypatch):
+    monkeypatch.setattr(cache, "_budget_bytes", lambda spark: 1)
+
+
+def test_no_trim_mid_query(spark, tiny_budget):
+    """A 6-deep chain with no boundary between its builds stays
+    resident even 1 byte over budget, and each link builds once."""
     calls: dict[int, int] = {}
-    n = _KEEP_RECENT + 2  # oldest two fall outside the protected set
-    builders = _make_builders(spark, n, calls)
+    builders = _make_builders(spark, 6, calls)
     try:
         for b in builders:
-            assert b(spark, "/bud") .count() == 1000
-        # over a 1-byte budget only the protected working set survives
-        live = [k for k in _LRU if k[1] == "/bud"]
-        assert len(live) == _KEEP_RECENT
-        # evicted entry rebuilds on demand — correctness unaffected
-        assert builders[0](spark, "/bud").count() == 1000
-        assert calls[0] == 2
-        # the most recent entries were never evicted (no thrash)
-        assert calls[n - 1] == 1 and calls[n - 2] == 1
+            assert b(spark, "/bud1").count() == 1000
+        for b in builders:
+            assert b(spark, "/bud1").count() == 1000
+        assert len(_live("/bud1")) == 6
+        assert calls == {i: 1 for i in range(6)}
     finally:
-        _drop_probes()
+        _drop_probes("/bud1")
 
 
-def test_generous_budget_keeps_entries_resident(spark, monkeypatch):
-    monkeypatch.setenv("MRS_SESSION_CACHE_BUDGET_BYTES", str(8 << 30))
+def test_boundary_trims_to_budget_and_rebuilds(spark, tiny_budget):
+    from map_reduce_spark.plans.transient import release_transient
 
     calls: dict[int, int] = {}
-    (build,) = _make_builders(spark, 1, calls)
+    builders = _make_builders(spark, 6, calls)
     try:
-        build(spark, "/bud2").count()
-        build(spark, "/bud2").count()
-        assert calls[0] == 1  # memoized, no rebuild under budget
+        for b in builders:
+            b(spark, "/bud2").count()
+        release_transient()  # query boundary: trim to the 1-byte budget
+        assert _live("/bud2") == []
+        # an evicted entry rebuilds on demand — correctness unaffected
+        assert builders[0](spark, "/bud2").count() == 1000
+        assert calls[0] == 2
     finally:
         _drop_probes("/bud2")
 
 
-def test_protection_expires_at_query_boundary(spark, monkeypatch):
-    """r11: the recent-working-set protection is QUERY-scoped — after
-    release_transient (the harness per-query drain), a prior query's
-    index frames are evictable even though they were the most recent
-    touches (the r11 sf10 sweep OOM'd on exactly the unexpiring-
-    protection variant)."""
-    from map_reduce_spark.plans.transient import release_transient
-    from map_reduce_spark.sources.cache import _KEEP_RECENT, _LRU
+def test_partial_drain_does_not_trim(spark, tiny_budget):
+    """A nested ``transient_scope`` exit (mark > 0) can sit between an
+    outer caller's build and materialize, so it is not a boundary."""
+    from map_reduce_spark.plans.transient import transient_persist, transient_scope
 
-    monkeypatch.setenv("MRS_SESSION_CACHE_BUDGET_BYTES", "1")
     calls: dict[int, int] = {}
-    builders = _make_builders(spark, _KEEP_RECENT + 1, calls)
+    builders = _make_builders(spark, 3, calls)
     try:
-        for b in builders[:_KEEP_RECENT]:  # "query 1" builds a chain
-            b(spark, "/bud3").count()
-        assert len([k for k in _LRU if k[1] == "/bud3"]) == _KEEP_RECENT
-        release_transient()  # query boundary: protection expires
-        builders[_KEEP_RECENT](spark, "/bud3").count()  # "query 2"
-        # the new insert's enforcement could evict ALL of query 1's
-        # frames (they are no longer protected); only query 2's own
-        # touch is guaranteed resident
-        live = [k for k in _LRU if k[1] == "/bud3"]
-        assert len(live) == 1
-        assert live[0][2].endswith(f"budget_probe_{_KEEP_RECENT}")
+        transient_persist(spark.range(10))  # the outer caller's enrollment
+        with transient_scope():
+            for b in builders:
+                b(spark, "/bud3").count()
+        assert len(_live("/bud3")) == 3
     finally:
         _drop_probes("/bud3")
+
+
+def test_hits_make_no_storage_or_jvm_call(spark, tiny_budget, monkeypatch):
+    calls: dict[int, int] = {}
+    (build,) = _make_builders(spark, 1, calls)
+    try:
+        first = build(spark, "/bud4")
+        storage_calls = []
+        real_persisted = cache._persisted_bytes
+        monkeypatch.setattr(
+            cache, "_persisted_bytes", lambda s: storage_calls.append(1) or real_persisted(s)
+        )
+        client = spark.sparkContext._gateway._gateway_client
+        jvm_calls = []
+        real_send = client.send_command
+        monkeypatch.setattr(
+            client, "send_command", lambda *a, **k: jvm_calls.append(a) or real_send(*a, **k)
+        )
+        for _ in range(10):
+            assert build(spark, "/bud4") is first
+        assert storage_calls == [] and jvm_calls == []
+        assert calls[0] == 1
+    finally:
+        _drop_probes("/bud4")
+
+
+def test_generous_budget_keeps_entries_resident(spark, monkeypatch):
+    from map_reduce_spark.plans.transient import release_transient
+
+    monkeypatch.setattr(cache, "_budget_bytes", lambda spark: 8 << 30)
+    calls: dict[int, int] = {}
+    (build,) = _make_builders(spark, 1, calls)
+    try:
+        build(spark, "/bud5").count()
+        release_transient()
+        build(spark, "/bud5").count()
+        assert calls[0] == 1  # memoized, no rebuild under budget
+    finally:
+        _drop_probes("/bud5")
